@@ -25,26 +25,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-HEADLINE_QUERIES = [
-    "theta_distinct",
-    "theta_jaccard",
-    "kll_quantiles",
-    "freq_items",
-    "aod_sums",
-    "topk_window",
-    "events_sessions",
-    "dedup_minhash",
-    "dedup_simhash",
-    "dedup_exact",
-    "doc_fingerprint",
-    "ann_cosine",
-    "ann_ivf",
-    "quality_score",
-    "dedup_jpeg",
-    "dedup_adpcm",
-    "dedup_mjpeg",
-    "streaming_replay",
-]
+from bench import HEADLINE_QUERIES  # noqa: E402
 
 
 def _spark():

@@ -55,11 +55,17 @@ def all_bands(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
     3-branch union (2 explodes + a select) — same rows, one scan of the
     signature table and a third of the codegen.  Zero-shingle modalities
     contribute no band rows (the degenerate-bucket rule ``bands_stage``
-    documents); the exact key always rides."""
+    documents); the exact key always rides — ``F.concat`` is NULL if any
+    term is, so each modality term falls back to the empty array, and a
+    NULL bands array cannot drop the clip's exact-key row."""
     empty = F.array().cast("array<long>")
+
+    def modality(n_col: str, bands_col: str):
+        return F.coalesce(F.when(F.col(n_col) > 0, F.col(bands_col)), empty)
+
     combined = F.concat(
-        F.when(F.col("n_text_shingles") > 0, F.col("text_bands")).otherwise(empty),
-        F.when(F.col("n_audio_shingles") > 0, F.col("audio_bands")).otherwise(empty),
+        modality("n_text_shingles", "text_bands"),
+        modality("n_audio_shingles", "audio_bands"),
         F.array(F.col("exact_key")),
     )
     return signatures.select("clip_id", F.explode(combined).alias("band_key"))

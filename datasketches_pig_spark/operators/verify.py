@@ -476,6 +476,7 @@ def verify_pairs(
     cfg: DedupConfig,
     transcripts: DataFrame | None = None,
     n_signatures: int | None = None,
+    n_pairs: int | None = None,
 ) -> DataFrame:
     """candidate (a, b) pairs + signatures → verified pairs with scores.
 
@@ -490,6 +491,10 @@ def verify_pairs(
     §3.1); localCheckpoint frames carry no size statistics, so without the
     hint Spark sort-merges these joins even when one side is a few MB.
     None (or a too-big count) keeps the statistics-driven planning.
+
+    ``n_pairs`` (optional): the row count of ``pairs``, when the caller
+    already knows it (the pipeline counts its candidates stage).  It feeds
+    the prefix-tier size gate; None counts ``pairs`` here.
 
     Data-volume design (the 100 TB concern), three tiers of payload:
 
@@ -543,11 +548,14 @@ def verify_pairs(
     # codegen).  Below ~half a million candidate pairs the fixed cost wins
     # (measured at 9.5 k clips / ~100 k pairs: verified 4.9–5.9 s tiered vs
     # 2.3–2.4 s single-tier; at 189 k clips / 1.8 M pairs the tier saves
-    # 6–10 s of an 8-core verify).  Callers pass `pairs` materialized (the
-    # pipeline checkpoints the candidates stage), so the count is a cached
-    # scan, and decisions are parity-identical either way by construction.
+    # 6–10 s of an 8-core verify).  The pipeline passes its candidates
+    # stage's count as `n_pairs`; other callers pass `pairs` materialized, so
+    # the count is a cached scan.  Decisions are parity-identical either way
+    # by construction.
     if prefix is not None and cfg.verify_prefix_min_pairs:
-        if pairs.count() < cfg.verify_prefix_min_pairs:
+        if n_pairs is None:
+            n_pairs = pairs.count()
+        if n_pairs < cfg.verify_prefix_min_pairs:
             prefix = None
 
     def _passthrough(df: DataFrame, dup_col) -> DataFrame:

@@ -248,6 +248,9 @@ def run_pipeline(
 
     release_shard_caches()
 
+    # the candidates stage's count (absent on resume) spares verify's
+    # prefix-tier gate its own count pass
+    n_cands = lineage[-1].get("rows_out")
     verified = stage(
         "verified",
         lambda: verify_pairs(
@@ -256,6 +259,7 @@ def run_pipeline(
             cfg,
             transcripts=clips.select("clip_id", "transcript"),
             n_signatures=n_sigs,
+            n_pairs=n_cands,
         ),
     )
 

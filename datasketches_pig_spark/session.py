@@ -25,6 +25,10 @@ _WORKER_ENV = {
     "ARROW_DEFAULT_MEMORY_POOL": "system",
 }
 
+# the directory that holds this package, so Python workers import the same
+# checkout as this process, whatever its cwd
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "datasketches-pig-spark",
@@ -88,6 +92,10 @@ def get_spark(
         .config("spark.driver.memory", mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Python 3.11 workers otherwise re-read pyspark.zip's directory on
+        # every task (~0.1-0.2 s each); see _worker_daemon and landmine 17
+        .config("spark.python.daemon.module", "datasketches_pig_spark._worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     for k, v in _WORKER_ENV.items():
         builder = builder.config(f"spark.executorEnv.{k}", v)
@@ -103,9 +111,12 @@ def warm_python_workers(spark: SparkSession, tasks: int | None = None) -> None:
     """Spin up one Python worker per core and pre-import the kernel modules.
 
     Worker processes are reused across stages (spark.python.worker.reuse), so
-    a long-running job pays import + allocator warmup once; benches call this
-    so measurements reflect the steady state rather than 32 parallel
-    interpreter startups.
+    a long-running job pays interpreter startup, imports and allocator warmup
+    once; benches call this so measurements reflect the steady state rather
+    than 32 parallel interpreter startups.  Reuse does not make per-task
+    setup free: every task still runs the worker's setup (see
+    ``_worker_daemon``), so fewer, larger Python tasks stay cheaper than
+    many small ones.
     """
     if tasks is None:
         master = spark.sparkContext.master

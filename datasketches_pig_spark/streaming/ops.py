@@ -197,10 +197,8 @@ def streaming_replay_stats(
             # before hashing, a per-batch per-row cost; distinct_users is
             # identical below k either way (count of distinct hashes =
             # count of distinct users, the exact-below-k gate regime)
-            users = pdf["user_id"].to_numpy()
-            if users.dtype != np.int64:
-                mask = pd.notna(pdf["user_id"]).to_numpy()
-                users = pdf["user_id"][mask].to_numpy(dtype=np.int64)
+            users = pdf["user_id"].to_numpy(dtype=np.int64)
+            users = users[~pdf["no_user"].to_numpy(dtype=bool)]
             h1, _ = murmur3_long_batch(users, seed)
             sketch = np.unique(np.concatenate([sketch, h1]))[:k]
         state.update((int(n), float(s), sketch.view(np.int64).tolist()))
@@ -218,6 +216,15 @@ def streaming_replay_stats(
             }
         )
 
+    # Arrow hands a long column that holds a NULL to pandas as float64, which
+    # rounds ids above 2^53 (landmine 8): the kernel gets a NULL-free id
+    # column plus the NULL mask instead
+    events = events.select(
+        "event_type",
+        F.coalesce("user_id", F.lit(0).cast("long")).alias("user_id"),
+        F.col("user_id").isNull().alias("no_user"),
+        "value",
+    )
     return events.groupBy("event_type").applyInPandasWithState(
         update,
         outputStructType=_REPLAY_OUT,

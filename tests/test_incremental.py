@@ -329,6 +329,21 @@ def test_incremental_releases_shard_caches(spark, split_corpus):
     assert len(_SHARD_CACHES) == 0
 
 
+def test_all_bands_null_bands_keep_exact_key(spark):
+    """A NULL bands array with a positive shingle count contributes no band
+    rows, but must not drop the clip's exact-key row (``F.concat`` is NULL
+    if any term is)."""
+    from datasketches_pig_spark.incremental import all_bands
+
+    sigs = spark.createDataFrame(
+        [(1, 5, None, 0, [], 42), (2, 2, [7, 8], 3, None, 43)],
+        "clip_id long, n_text_shingles int, text_bands array<long>, "
+        "n_audio_shingles int, audio_bands array<long>, exact_key long",
+    )
+    got = sorted(tuple(r) for r in all_bands(sigs, DedupConfig()).collect())
+    assert got == [(1, 42), (2, 7), (2, 8), (2, 43)]
+
+
 # ---------------------------------------------------------------------------
 # single-writer fence (VERDICT r6 item 4)
 # ---------------------------------------------------------------------------

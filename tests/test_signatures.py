@@ -306,3 +306,30 @@ def test_simhash_combo_keys_np_matches_codegen(spark):
             ).toPandas()["k"].tolist()
         )
         assert np.array_equal(got_sql, simhash_combo_keys_np(sims, h))
+
+
+def test_simhash_combo_key_array_matches_np(spark):
+    """The packed-literal ``transform`` form the near-pair operators plan
+    with must explode to the numpy combo keys, combo by combo, for every
+    Hamming budget it is used at."""
+    import pyspark.sql.functions as F
+
+    from datasketches_pig_spark.operators.signatures import simhash_combo_keys_np
+    from datasketches_pig_spark.textops.dedup import simhash_combo_key_array
+
+    rng = np.random.RandomState(11)
+    sims = np.concatenate(
+        [
+            np.array([0, -1, -(2**63), 2**63 - 1], dtype=np.int64),
+            rng.randint(-(2**63), 2**63 - 1, size=96, dtype=np.int64),
+        ]
+    )
+    df = spark.createDataFrame([(i, int(s)) for i, s in enumerate(sims)], "i int, simhash long")
+    for h in (3, 4, 6):
+        got = (
+            df.select("i", F.posexplode(simhash_combo_key_array(F.col("simhash"), h)))
+            .orderBy("i", "pos")
+            .toPandas()["col"]
+            .to_numpy()
+        )
+        assert np.array_equal(got, simhash_combo_keys_np(sims, h).ravel())

@@ -142,3 +142,23 @@ def test_replay_cleans_up_tempdirs_and_sink(spark, events):
         if t.name.startswith("replay_")
     } - views_before
     assert leaked == set()
+
+
+def test_replay_keeps_64bit_user_ids_with_nulls(spark):
+    """Ids above 2^53 that differ only in their low bits stay distinct when
+    the batch also holds a NULL id (Arrow would hand that column to pandas
+    as float64, which rounds both ids to one value — landmine 8)."""
+    big = 2**60
+    pdf = pd.DataFrame(
+        {
+            "event_id": np.arange(3, dtype=np.int64),
+            "user_id": pd.array([big + 1, big + 2, None], dtype="Int64"),
+            "event_type": ["click"] * 3,
+            "value": [1.0, 2.0, 3.0],
+        }
+    )
+    events = spark.createDataFrame(
+        pdf, "event_id long, user_id long, event_type string, value double"
+    )
+    (row,) = replay_events(spark, events, n_slices=1).collect()
+    assert (row.n_events, row.sum_value, row.distinct_users) == (3, 6.0, 2)
