@@ -108,10 +108,6 @@ def unregister_audio_decoder(codec: str) -> None:
     _AUDIO.pop(codec, None)
 
 
-def unregister_image_decoder(codec: str) -> None:
-    _IMAGE.pop(codec, None)
-
-
 def unregister_video_decoder(codec: str) -> None:
     _VIDEO.pop(codec, None)
 

@@ -3,20 +3,27 @@ the reference's ``hash.MurmurHash3`` Pig UDF (``pig/hash/MurmurHash3.java:45``):
 128-bit result (h0, h1) plus optional modulo of the unsigned 128-bit value,
 strings UTF-8 encoded first (``:179``), null/empty → null (``:168-181``).
 
+This is the engine's one MurmurHash3 path into Spark plans: the theta sketch
+hashes every value type through ``murmur3_h1_ordered``, and
+``register_sql_functions`` registers the UDFs the Column API builds, so each
+body exists once.  They are ``arrow_udf``s that dispatch on the Arrow type of
+the batch: an integral column reaches the 8-byte kernel as int64 values plus
+its validity bitmap.  A pandas UDF would see a nullable ``long`` batch as
+float64 and hash the float instead.
+
 Double canonicalization follows the DataSketches update(double) contract
 (``theta/DataToSketchTest.java:195-199``): -0.0 hashes as +0.0.  NaN is
-treated as null (no update) — a deliberate deviation: Arrow ships SQL NULL
-doubles to pandas as NaN, so the two are indistinguishable batch-side, and
-dropping both matches Pig's null-datum no-op rule.
+treated as null (no update) — a deliberate deviation from the reference,
+which hashes NaN as one value: the engine's pandas paths cannot tell a SQL
+NULL double from NaN, so both follow Pig's null-datum no-op rule.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-import pyspark.sql.functions as F
+import pyarrow as pa
 from pyspark.sql import Column
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 from datasketches_pig_spark.functions.murmur3 import (
     murmur3_bytes_batch,
@@ -25,160 +32,86 @@ from datasketches_pig_spark.functions.murmur3 import (
 
 SIGN_FLIP = np.uint64(1) << np.uint64(63)
 
-_C1 = -8663945395140668459  # 0x87c37b91114253d5 as signed int64
-_C2 = 5545529020109919103  # 0x4cf5ad432745937f
-_FMIX1 = -49064778989728563  # 0xff51afd7ed558ccd
-_FMIX2 = -4265267296055464877  # 0xc4ceb9fe1a85ec53
 
-
-def _s64(x: int) -> int:
-    """Wrap an unsigned 64-bit int into the signed int64 literal range."""
-    x &= (1 << 64) - 1
-    return x - (1 << 64) if x >= (1 << 63) else x
-
-
-def _rotl(col: Column, r: int) -> Column:
-    return F.shiftleft(col, r).bitwiseOR(F.shiftrightunsigned(col, 64 - r))
-
-
-def _fmix64(col: Column) -> Column:
-    h = col.bitwiseXOR(F.shiftrightunsigned(col, 33))
-    h = h * F.lit(_FMIX1)
-    h = h.bitwiseXOR(F.shiftrightunsigned(h, 33))
-    h = h * F.lit(_FMIX2)
-    return h.bitwiseXOR(F.shiftrightunsigned(h, 33))
-
-
-def murmur3_h1_long_expr(col: Column, seed: int = 9001, ordered: bool = False) -> Column:
-    """First 64 bits of MurmurHash3_x64_128 of an int64 value (8-byte
-    little-endian encoding, the datasketches update(long) form) as PURE
-    whole-stage-codegen column algebra — bit-identical to
-    ``murmur3.murmur3_long_batch`` (parity test
-    ``tests/test_murmur3.py::test_jvm_long_expr_parity``) with no
-    Python boundary (guide §4.1: prefer built-ins over UDFs).
-
-    Java long arithmetic wraps mod 2^64 exactly like the C/numpy uint64
-    kernels; requires ``spark.sql.ansi.enabled=false`` (set by
-    ``session.get_spark``), otherwise a wrapping multiply raises.  With
-    ``ordered=True`` the sign bit is flipped so signed ordering equals
-    unsigned hash ordering (the KMV/theta storage form).  Null in → null
-    out (the reference's null-datum no-op rule; empty input cannot occur
-    for a fixed 8-byte value)."""
-    v = col.cast("long")
-    # 8-byte input: no 16-byte body blocks, tail k1 = the value itself
-    k1 = v * F.lit(_C1)
-    k1 = _rotl(k1, 31)
-    k1 = k1 * F.lit(_C2)
-    h1 = F.lit(_s64(seed)).bitwiseXOR(k1)
-    h2 = F.lit(_s64(seed))
-    ln = F.lit(8)
-    h1 = h1.bitwiseXOR(ln)
-    h2 = h2.bitwiseXOR(ln)
-    h1 = h1 + h2
-    h2 = h2 + h1
-    h1 = _fmix64(h1)
-    h2 = _fmix64(h2)
-    out = h1 + h2  # final h1 += h2 (h2 += h1 only affects the unused h2)
-    if ordered:
-        out = out.bitwiseXOR(F.lit(_s64(1 << 63)))
-    return out
-
-
-def _hash_series(s: pd.Series, seed: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Hash a pandas Series by dtype: int64 → 8-byte LE; everything else via
-    its canonical byte representation (strings UTF-8, bytes raw)."""
-    if pd.api.types.is_integer_dtype(s.dtype) and not s.isna().any():
-        h1, h2 = murmur3_long_batch(s.to_numpy(dtype=np.int64), seed)
-        return h1, h2, np.ones(len(s), dtype=bool)
-    vals: list[bytes | None] = []
-    for v in s:
-        if v is None or (isinstance(v, float) and np.isnan(v)):
-            vals.append(None)
-        elif isinstance(v, (bytes, bytearray)):
-            vals.append(bytes(v))
-        elif isinstance(v, str):
-            vals.append(v.encode("utf-8"))
-        elif isinstance(v, (int, np.integer)):
-            vals.append(int(np.int64(v)).to_bytes(8, "little", signed=True))
-        elif isinstance(v, (float, np.floating)):
-            d = float(v)
-            d = 0.0 if d == 0.0 else d  # -0.0 → +0.0 canonicalization
-            vals.append(np.float64(d).tobytes())
-        else:
-            vals.append(str(v).encode("utf-8"))
+def _hash_array(arr: pa.Array, seed: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Hash one Arrow batch by its type: integral and boolean values as their
+    8-byte little-endian int64, floating values as their 8-byte float64,
+    strings as UTF-8, binary as is, anything else as the UTF-8 of its
+    ``str()``.  Returns (h1, h2, valid) with h1/h2 uint64."""
+    t = arr.type
+    if pa.types.is_floating(t):
+        d = arr.cast(pa.float64()).fill_null(np.nan).to_numpy()
+        valid = ~np.isnan(d)
+        h1, h2 = murmur3_long_batch(np.where(d == 0.0, 0.0, d).view(np.int64), seed)
+        return h1, h2, valid
+    if pa.types.is_integer(t) or pa.types.is_boolean(t):
+        valid = arr.is_valid().to_numpy(zero_copy_only=False)
+        h1, h2 = murmur3_long_batch(arr.cast(pa.int64()).fill_null(0).to_numpy(), seed)
+        return h1, h2, valid
+    if t in (pa.string(), pa.large_string(), pa.binary(), pa.large_binary()):
+        vals = arr.cast(pa.large_binary()).to_pylist()
+    else:
+        vals = [None if v is None else str(v).encode("utf-8") for v in arr.to_pylist()]
     return murmur3_bytes_batch(vals, seed)
+
+
+def _h1_udf(seed: int, ordered: bool):
+    flip = SIGN_FLIP if ordered else np.uint64(0)
+
+    @arrow_udf("long")
+    def _udf(arr: pa.Array) -> pa.Array:
+        h1, _, valid = _hash_array(arr, seed)
+        return pa.array((h1 ^ flip).view(np.int64), mask=~valid)
+
+    return _udf
+
+
+def _h128_udf(seed: int, divisor: int | None):
+    if divisor is not None and not (0 < divisor <= 2**31 - 1):
+        # mod is a 32-bit struct field; a larger divisor would make every
+        # batch fail at runtime, so refuse it when the plan is built
+        raise ValueError(f"murmur3_128: divisor must be in (0, 2^31-1], got {divisor}")
+
+    @arrow_udf("struct<h0: long, h1: long, mod: int>")
+    def _udf(arr: pa.Array) -> pa.Array:
+        h1, h2, valid = _hash_array(arr, seed)
+        if divisor:
+            # (h2·2^64 + h1) mod d in uint64: every term stays below 2^63
+            d = np.uint64(divisor)
+            mod = ((h2 % d) * np.uint64((1 << 64) % divisor) + h1 % d) % d
+            mod = pa.array(mod.astype(np.int32), mask=~valid)
+        else:
+            mod = pa.nulls(len(arr), pa.int32())
+        return pa.StructArray.from_arrays(
+            [
+                pa.array(h1.view(np.int64), mask=~valid),
+                pa.array(h2.view(np.int64), mask=~valid),
+                mod,
+            ],
+            names=["h0", "h1", "mod"],
+        )
+
+    return _udf
 
 
 def murmur3_h1(col, seed: int = 9001) -> Column:
     """Column UDF: first 64 bits of murmur3-128, as signed int64 (null for
     null/empty input)."""
-
-    @pandas_udf("long")
-    def _udf(s: pd.Series) -> pd.Series:
-        h1, _, valid = _hash_series(s, seed)
-        # nullable Int64, NOT None-into-int64 masking: pandas silently casts
-        # an int64 column to float64 on None assignment, truncating hashes
-        # below 2^53 precision for the whole batch
-        out = pd.Series(pd.array(h1.view(np.int64), dtype="Int64"))
-        out[~valid] = pd.NA
-        return out
-
-    return _udf(col)
+    return _h1_udf(seed, ordered=False)(col)
 
 
 def murmur3_h1_ordered(col, seed: int = 9001) -> Column:
     """Like murmur3_h1 but with the sign bit flipped, so signed int64 ordering
     equals unsigned uint64 ordering — the representation the KMV/theta sketch
     layer stores (bottom-k by unsigned hash via plain ORDER BY)."""
-
-    @pandas_udf("long")
-    def _udf(s: pd.Series) -> pd.Series:
-        h1, _, valid = _hash_series(s, seed)
-        out = pd.Series(pd.array((h1 ^ SIGN_FLIP).view(np.int64), dtype="Int64"))
-        out[~valid] = pd.NA
-        return out
-
-    return _udf(col)
+    return _h1_udf(seed, ordered=True)(col)
 
 
 def murmur3_128(col, seed: int = 9001, divisor: int | None = None) -> Column:
     """Full reference-parity UDF: (h0 long, h1 long, mod int) struct; ``mod``
     is the unsigned 128-bit value modulo ``divisor`` (null if no divisor) —
     the LSH band→bucket assignment primitive (``pig/hash/MurmurHash3.java:85-101``)."""
-    if divisor is not None and not (0 < divisor <= 2**31 - 1):
-        # mod is a 32-bit struct field; larger divisors would fail per-batch
-        raise ValueError(
-            f"murmur3_128: divisor must be in (0, 2^31-1], got {divisor}"
-        )
-
-    @pandas_udf("struct<h0: long, h1: long, mod: int>")
-    def _udf(s: pd.Series) -> pd.DataFrame:
-        h1, h2, valid = _hash_series(s, seed)
-        mod = np.zeros(len(s), dtype=np.int64)
-        if divisor:
-            # (h2·2^64 + h1) mod d, using python ints for the 128-bit fold
-            mod = np.array(
-                [((int(b) << 64) | int(a)) % divisor for a, b in zip(h1, h2)],
-                dtype=np.int64,
-            )
-        # nullable extension dtypes: .loc[...] = None on plain int64 columns
-        # casts them to float64 even when the mask is all-False, truncating
-        # every hash to 53-bit float precision (caught by the VALUES oracle)
-        out = pd.DataFrame(
-            {
-                "h0": pd.array(h1.view(np.int64), dtype="Int64"),
-                "h1": pd.array(h2.view(np.int64), dtype="Int64"),
-                "mod": pd.array(mod, dtype="Int32"),
-            }
-        )
-        out.loc[~valid, ["h0", "h1", "mod"]] = pd.NA
-        if not divisor:
-            # keep the Int32 extension dtype — a bare pd.NA assignment flips
-            # the column to object dtype and breaks Arrow conversion
-            out["mod"] = pd.array([pd.NA] * len(out), dtype="Int32")
-        return out
-
-    return _udf(col)
+    return _h128_udf(seed, divisor)(col)
 
 
 def register_sql_functions(
@@ -202,58 +135,14 @@ def register_sql_functions(
       128-bit value modulo ``divisor`` — the Pig UDF's bucket-assignment
       arg — or null when no divisor is bound)
 
-    Returns the registered names.
+    Returns the registered names.  An out-of-range divisor raises before
+    anything is registered.
     """
-    if divisor is not None and not (0 < divisor <= 2**31 - 1):
-        # mod is declared int (32-bit) in the struct schema; a divisor above
-        # INT32_MAX would make every batch raise at runtime even though
-        # registration itself succeeds — validate here like the reference
-        # validates its ctor args at plan time
-        raise ValueError(
-            f"register_sql_functions: divisor must be in (0, 2^31-1], got {divisor}"
-        )
-
-    def _reg_h1(name: str, flip: bool):
-        @pandas_udf("long")
-        def _udf(s: pd.Series) -> pd.Series:
-            h1, _, valid = _hash_series(s, seed)
-            if flip:
-                h1 = h1 ^ SIGN_FLIP
-            out = pd.Series(pd.array(h1.view(np.int64), dtype="Int64"))
-            out[~valid] = pd.NA
-            return out
-
-        spark.udf.register(name, _udf)
-
-    _reg_h1(f"{prefix}murmur3_h1", flip=False)
-    _reg_h1(f"{prefix}murmur3_h1_ordered", flip=True)
-
-    @pandas_udf("struct<h0: long, h1: long, mod: int>")
-    def _udf128(s: pd.Series) -> pd.DataFrame:
-        h1, h2, valid = _hash_series(s, seed)
-        mod = np.zeros(len(s), dtype=np.int64)
-        if divisor:
-            mod = np.array(
-                [((int(b) << 64) | int(a)) % divisor for a, b in zip(h1, h2)],
-                dtype=np.int64,
-            )
-        out = pd.DataFrame(
-            {
-                "h0": pd.array(h1.view(np.int64), dtype="Int64"),
-                "h1": pd.array(h2.view(np.int64), dtype="Int64"),
-                "mod": pd.array(mod, dtype="Int32"),
-            }
-        )
-        out.loc[~valid, ["h0", "h1", "mod"]] = pd.NA
-        if not divisor:
-            # keep the Int32 extension dtype — a bare pd.NA assignment flips
-            # the column to object dtype and breaks Arrow conversion
-            out["mod"] = pd.array([pd.NA] * len(out), dtype="Int32")
-        return out
-
-    spark.udf.register(f"{prefix}murmur3_128", _udf128)
-    return [
-        f"{prefix}murmur3_h1",
-        f"{prefix}murmur3_h1_ordered",
-        f"{prefix}murmur3_128",
-    ]
+    udfs = {
+        f"{prefix}murmur3_h1": _h1_udf(seed, ordered=False),
+        f"{prefix}murmur3_h1_ordered": _h1_udf(seed, ordered=True),
+        f"{prefix}murmur3_128": _h128_udf(seed, divisor),
+    }
+    for name, udf in udfs.items():
+        spark.udf.register(name, udf)
+    return list(udfs)

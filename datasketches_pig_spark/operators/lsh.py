@@ -125,45 +125,15 @@ def _salted_pairs(
     key: str,
     cap: int,
     all_pairs_small: bool,
-    adaptive: bool = False,
     num_partitions: int | None = None,
 ) -> DataFrame:
     """(key, clip_id) rows → (a, b) pairs with per-reducer state bounded by
     salting.  ``all_pairs_small``: emit all-pairs for buckets ≤ cap (LSH
     candidates) or always star-link (exact-key cliques).
 
-    ``adaptive`` (opt-in, default off): probe the bucket-size histogram
-    first — a count-only aggregation — and when no bucket exceeds cap+1 run
-    the single-shuffle exact expansion instead of the two-level salted form.
-    Measured on the 94k-clip scaling input (3M band rows, /dev/shm shuffle):
-    the probe + persist machinery costs MORE than the level-1 pass it skips
-    (8 cores: 5.1-5.7 s adaptive vs 4.3 s salted; 2 cores: 13.2 vs 9.5 s),
-    because the salted path streams once through two cheap shuffles while
-    the probe adds a cache materialization plus an extra driver action.  The
-    salted two-level form is therefore BOTH the bounded-state path and the
-    fast path here; ``adaptive=True`` remains available for callers whose
-    shuffle medium is slow relative to an extra cached pass.  The probe
-    consumes ``keyed`` once more, so it is persisted in adaptive mode."""
-    if adaptive:
-        keyed = keyed.persist()
-        mx_row = (
-            keyed.groupBy(key)
-            .agg(F.count(F.lit(1)).alias("n"))
-            .agg(F.max("n").alias("mx"))
-            .collect()
-        )
-        mx = mx_row[0]["mx"] or 0
-        if mx <= cap + 1:
-            # no shard could truncate at level 1, so the salted form would
-            # reproduce exactly this: one shuffle, state ≤ cap+1 members
-            buckets = keyed.groupBy(key).agg(
-                F.array_sort(F.collect_list("clip_id")).alias("members"),
-                F.count(F.lit(1)).alias("bucket_n"),
-            ).filter(F.col("bucket_n") >= 2)
-            return _expand(
-                buckets,
-                _pairs_expr(F.col("members"), F.col("bucket_n"), cap, all_pairs_small),
-            )
+    The two-level salted form is also the fast path: skipping level 1
+    after a bucket-size probe measured slower (3M band rows, 8 cores:
+    5.1-5.7 s vs 4.3 s)."""
     salted = keyed.withColumn(
         "__salt", F.pmod(F.xxhash64("clip_id"), F.lit(SALT_SHARDS))
     )
@@ -220,7 +190,6 @@ def bucket_pairs(
     id_col: str,
     cap: int,
     all_pairs_small: bool = True,
-    adaptive: bool = False,
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Public form of the salted bucket-pair expansion for any (key, id)
@@ -229,10 +198,9 @@ def bucket_pairs(
     for bounded inputs (see ``derived_shuffle_partitions``); None keeps the
     session's shuffle-partition conf."""
     renamed = keyed.select(F.col(key), F.col(id_col).alias("clip_id"))
-    out = _salted_pairs(
-        renamed, key, cap, all_pairs_small, adaptive, num_partitions=num_partitions
+    return _salted_pairs(
+        renamed, key, cap, all_pairs_small, num_partitions=num_partitions
     )
-    return out
 
 
 def bucket_summaries(keyed: DataFrame, key: str, id_col: str, cap: int) -> DataFrame:

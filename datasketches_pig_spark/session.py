@@ -67,14 +67,6 @@ def get_spark(
         .config("spark.executor.extraJavaOptions", jvm_opts)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.session.timeZone", "UTC")
-        # ANSI off: the engine is hash-arithmetic-heavy (murmur3 finalizers,
-        # rotl/fmix as long multiply-with-wraparound) and Spark 4's ANSI
-        # default turns every wrapping multiply into an ARITHMETIC_OVERFLOW
-        # error — 2^64 wrap semantics are the *correct* semantics for hash
-        # algebra.  Also removes the per-operation overflow-check branches
-        # from all whole-stage-generated code.  Every oracle-gated query is
-        # value-hash-checked under this setting (tools/check_oracle.py).
-        .config("spark.sql.ansi.enabled", "false")
         .config("spark.sql.adaptive.enabled", "true")
         # coalescePartitions is OFF: AQE coalesces by shuffle BYTES, but the
         # engine's hot shuffles carry CPU-dense rows (candidate pairs ~60 B/row

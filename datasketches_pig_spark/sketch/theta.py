@@ -4,9 +4,11 @@ The reference's theta package (``pig/theta/DataToSketch.java:54`` et al.) is a
 bottom-k (KMV) sketch over MurmurHash3(seed 9001) values with full set
 algebra.  Here the sketch is an ``array<long>`` column: the k smallest hash
 values in *sign-flipped* int64 representation (signed order == unsigned
-order), built with pure relational operators — hash UDF → distinct →
-salted two-level bottom-k → sorted array.  Catalyst handles partial aggregation,
-shuffle and codegen; no sketch bytes, no custom aggregation buffers.
+order), built with relational operators around one hash — the
+``murmur3_h1_ordered`` Arrow UDF, for every value type → salted two-level
+bottom-k (dedup and rank in one window pass) → sorted array.  Catalyst
+handles partial aggregation, shuffle and codegen; no sketch bytes, no custom
+aggregation buffers, and no session conf the result depends on.
 
 Exact-mode contract preserved: below k entries the sketch retains everything
 and every derived statistic is exact (``dictionary.html:62-63``) — which is
@@ -20,13 +22,9 @@ array_except over sketch columns, re-trimmed to bottom-k.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-import pyspark.sql.types as T
 from pyspark.sql import Column, DataFrame, Window
 
-from datasketches_pig_spark.functions.spark_udfs import (
-    murmur3_h1_long_expr,
-    murmur3_h1_ordered,
-)
+from datasketches_pig_spark.functions.spark_udfs import murmur3_h1_ordered
 
 DEFAULT_K = 4096  # reference default nominal entries (dictionary.html:42-44)
 _N_SALTS = 32  # two-level bottom-k fan-out; merge state <= _N_SALTS * k per group
@@ -43,11 +41,12 @@ def _two_level_bottom_k(
 
     Level 1 computes the k smallest DISTINCT hashes per (group, salt) in a
     single window pass — ``dense_rank <= k`` bounds to the k smallest
-    distinct values and the ``lag != __h`` atom keeps one row per value
-    (both functions share one window spec, so this is ONE exchange + one
-    spillable external sort; r8 replaced the former dropDuplicates +
-    row_number shape, which shuffled the stream twice, with this single
-    exchange — same result, one fewer shuffle of the full hash stream).
+    distinct values and the ``lag != __h`` atom keeps one row per value;
+    null hashes sort last and are dropped here (both functions share one
+    window spec, so this is ONE exchange + one spillable external sort; r8
+    replaced the former dropDuplicates + row_number shape, which shuffled
+    the stream twice, with this single exchange — same result, one fewer
+    shuffle of the full hash stream).
     The sort is spread over ``n_salts`` tasks per group, so a group with
     10^9 distinct hashes is never a single-task sort; duplicates of one
     value always share a salt (salt hashes __h), keeping partials disjoint.
@@ -55,7 +54,7 @@ def _two_level_bottom_k(
     n_salts * k int64s, ~1 MB at k=4096/salts=32).
     """
     salted = hashed.withColumn("__salt", F.pmod(F.xxhash64("__h"), F.lit(n_salts)))
-    w = Window.partitionBy(*group_cols, "__salt").orderBy("__h")
+    w = Window.partitionBy(*group_cols, "__salt").orderBy(F.col("__h").asc_nulls_last())
     partial = (
         salted.select(
             *group_cols,
@@ -66,6 +65,7 @@ def _two_level_bottom_k(
         )
         .filter(
             (F.col("__rk") <= k)
+            & F.col("__h").isNotNull()
             & (F.col("__prev").isNull() | (F.col("__prev") != F.col("__h")))
         )
         .groupBy(*group_cols, "__salt")
@@ -94,6 +94,10 @@ def theta_sketch_agg(
 ) -> DataFrame:
     """Build a KMV sketch per group: group_cols + ``sketch array<long>``.
 
+    Values of any type hash through ``murmur3_h1_ordered`` (integral values
+    as their 8-byte int64, the update(long) form); nulls, NaN and empty
+    strings are no-op updates.
+
     Scale shape: the raw hash stream shuffles ONCE, straight into the
     salted two-level bottom-k (dedup + rank in a single window pass per
     (group, salt) shard — see ``_two_level_bottom_k``), so no task ever
@@ -116,23 +120,19 @@ def theta_sketch_agg(
             f"theta sampling probability p must be in (0, 1], got {p} "
             "(reference contract: theta/DataToSketch.java:129-135)"
         )
-    dtype = df.schema[value_col].dataType
-    if isinstance(dtype, (T.LongType, T.IntegerType, T.ShortType, T.ByteType)):
-        # integral values hash as their 8-byte LE representation — pure
-        # whole-stage-codegen JVM algebra, no Python boundary (guide §4.1;
-        # bit-identical to the pandas kernel, parity-tested).  The isNotNull
-        # prefilter replaces the former dropna on the UDF output: it pushes
-        # to the scan (PushedFilters) instead of duplicating hash evaluation
-        # around a post-hoc filter (guide §4.4's duplicated-UDF pattern).
-        hashed = df.where(F.col(value_col).isNotNull()).select(
-            *group_cols,
-            murmur3_h1_long_expr(F.col(value_col), seed, ordered=True).alias("__h"),
-        )
-    else:
-        hashed = df.select(
-            *group_cols, murmur3_h1_ordered(F.col(value_col), seed).alias("__h")
-        ).dropna(subset=["__h"])
+    # the isNotNull prefilter pushes to the scan (PushedFilters) and keeps
+    # null rows out of the hash batches; values the kernel still maps to null
+    # (NaN, empty strings) are dropped inside the bottom-k window pass, not by
+    # a filter on the UDF output, which Catalyst would answer by evaluating
+    # the UDF twice
+    hashed = df.where(F.col(value_col).isNotNull()).select(
+        *group_cols, murmur3_h1_ordered(F.col(value_col), seed).alias("__h")
+    )
     if p < 1.0:
+        # this filter on the UDF output is kept so that p also cuts the
+        # shuffle; Catalyst evaluates the hash twice for it (filter and
+        # projection), which measured within noise of an in-window threshold
+        # on sf0.1 orders
         hashed = hashed.filter(F.col("__h") < F.lit(sampling_threshold_ordered(p)))
     return _two_level_bottom_k(hashed, group_cols, k)
 

@@ -45,30 +45,6 @@ def test_exact_dup_star_connectivity(spark):
     assert comp.select("cluster_id").distinct().count() == 1
 
 
-def test_adaptive_matches_salted_path(spark):
-    # adaptive probe must produce the identical pair set as the forced
-    # two-level salted form, on data with every bucket under the cap
-    from datasketches_pig_spark.operators.lsh import bucket_pairs
-
-    bands = spark.range(200).select(
-        F.format_string("c_%03d", F.col("id")).alias("cid"),
-        (F.col("id") % 40).alias("bkey"),  # 40 buckets of 5 members
-    )
-    fast = {
-        tuple(r)
-        for r in bucket_pairs(bands, "bkey", "cid", cap=64, adaptive=True)
-        .distinct()
-        .collect()
-    }
-    slow = {
-        tuple(r)
-        for r in bucket_pairs(bands, "bkey", "cid", cap=64, adaptive=False)
-        .distinct()
-        .collect()
-    }
-    assert fast == slow and len(fast) == 40 * 10  # exact all-pairs per bucket
-
-
 def test_bucket_summaries_invariants(spark):
     """bucket_n exact, center == global min, members complete iff <= cap+1,
     members always sorted and bounded — including buckets far above cap."""

@@ -227,47 +227,86 @@ def test_register_sql_functions_no_divisor_and_validation(spark):
         murmur3_128("s", divisor=2**40)
 
 
-def test_jvm_long_expr_parity(spark):
-    """murmur3_h1_long_expr (pure whole-stage-codegen JVM algebra) must be
-    bit-identical to the numpy kernel for int64 inputs, in both plain and
-    sign-flipped (ordered) forms, including nulls and the extremes."""
-    import pandas as pd
+def _signed(u: int) -> int:
+    return u - (1 << 64) if u >= (1 << 63) else u
+
+
+def test_udfs_hash_integral_batch_with_nulls_as_int64(spark):
+    """An integral batch that holds a null must still hash every value as
+    its 8-byte int64 (the update(long) form), in the Column API and in the
+    registered SQL functions alike.  Converting the batch to pandas would
+    turn it into float64, hash the float and round values above 2^53."""
     import pyspark.sql.functions as F
 
     from datasketches_pig_spark.functions.murmur3 import murmur3_long_batch
     from datasketches_pig_spark.functions.spark_udfs import (
-        SIGN_FLIP,
-        murmur3_h1_long_expr,
+        murmur3_128,
+        murmur3_h1,
+        murmur3_h1_ordered,
+        register_sql_functions,
     )
 
-    rng = np.random.default_rng(7)
-    vals = np.concatenate(
-        [
-            rng.integers(-(2**63), 2**63, size=500, dtype=np.int64),
-            np.array([0, 1, -1, 2**63 - 1, -(2**63)], dtype=np.int64),
-        ]
+    vals = [1, None, 2**53 + 1, 2**63 - 1, -(2**63)]
+    # one partition, so the null shares its Arrow batch with every value
+    df = spark.createDataFrame(list(enumerate(vals)), "i int, v long").coalesce(1)
+    register_sql_functions(spark, prefix="nb_", seed=9001, divisor=7)
+    df.createOrReplaceTempView("t_null_batch")
+    col = {
+        r["i"]: r
+        for r in df.select(
+            "i",
+            murmur3_h1(F.col("v")).alias("h"),
+            murmur3_h1_ordered(F.col("v")).alias("ho"),
+            murmur3_128(F.col("v"), divisor=7).alias("full"),
+            murmur3_128(F.col("v"), divisor=2**31 - 1).alias("big"),
+        ).collect()
+    }
+    sql = {
+        r["i"]: r["h"]
+        for r in spark.sql("SELECT i, nb_murmur3_h1(v) AS h FROM t_null_batch").collect()
+    }
+
+    for i, v in enumerate(vals):
+        if v is None:
+            assert col[i]["h"] is None and col[i]["ho"] is None and sql[i] is None
+            assert col[i]["full"]["h0"] is None and col[i]["full"]["mod"] is None
+            continue
+        h1, h2 = (int(x[0]) for x in murmur3_long_batch(np.array([v], np.int64), 9001))
+        assert col[i]["h"] == _signed(h1), v
+        assert col[i]["ho"] == _signed(h1 ^ (1 << 63)), v
+        assert sql[i] == _signed(h1), v
+        full = col[i]["full"]
+        assert (full["h0"], full["h1"]) == (_signed(h1), _signed(h2)), v
+        assert full["mod"] == ((h2 << 64) | h1) % 7, v
+        assert col[i]["big"]["mod"] == ((h2 << 64) | h1) % (2**31 - 1), v
+
+
+def test_theta_sketch_drops_values_that_hash_to_null(spark):
+    """theta_sketch_agg hashes every type through the one Arrow UDF: nulls
+    and empty strings never enter a sketch (NaN: see
+    test_negative_zero_canonicalization), and integral values keep their
+    int64 hash when their group also holds nulls."""
+    from datasketches_pig_spark.functions.murmur3 import (
+        murmur3_long_batch,
+        murmur3_x64_128,
     )
-    df = spark.createDataFrame(pd.DataFrame({"v": vals}))
-    got = df.select(
-        murmur3_h1_long_expr(F.col("v"), 9001).alias("h"),
-        murmur3_h1_long_expr(F.col("v"), 9001, ordered=True).alias("ho"),
-        murmur3_h1_long_expr(F.col("v"), 42).alias("h42"),
-    ).toPandas()
-    exp1, _ = murmur3_long_batch(vals, 9001)
-    exp42, _ = murmur3_long_batch(vals, 42)
-    assert np.array_equal(got["h"].to_numpy(np.int64).view(np.uint64), exp1)
-    assert np.array_equal(
-        got["ho"].to_numpy(np.int64).view(np.uint64), exp1 ^ SIGN_FLIP
+    from datasketches_pig_spark.functions.spark_udfs import SIGN_FLIP
+    from datasketches_pig_spark.sketch.theta import theta_sketch_agg
+
+    def ordered(h1s):
+        return sorted(_signed(int(h) ^ int(SIGN_FLIP)) for h in h1s)
+
+    longs = spark.createDataFrame(
+        [("g", 1), ("g", None), ("g", 2**53 + 1), ("g", 1)], "g string, v long"
+    ).coalesce(1)
+    want = ordered(murmur3_long_batch(np.array([1, 2**53 + 1], np.int64), 9001)[0])
+    assert theta_sketch_agg(longs, ["g"], "v", k=16).collect()[0]["sketch"] == want
+
+    strs = spark.createDataFrame(
+        [("g", "a"), ("g", ""), ("g", None), ("h", "")], "g string, v string"
     )
-    assert np.array_equal(got["h42"].to_numpy(np.int64).view(np.uint64), exp42)
-    # null in → null out
-    pdf = pd.DataFrame({"v": pd.array([1, None], dtype="Int64")})
-    nulls = (
-        spark.createDataFrame(pdf)
-        .select(murmur3_h1_long_expr(F.col("v"), 9001).alias("h"))
-        .collect()
-    )
-    assert nulls[0]["h"] is not None and nulls[1]["h"] is None
+    got = {r["g"]: r["sketch"] for r in theta_sketch_agg(strs, ["g"], "v", k=16).collect()}
+    assert got == {"g": ordered([murmur3_x64_128(b"a", 9001)[0]])}
 
 
 def test_two_level_bottom_k_single_window_parity(spark):

@@ -2,6 +2,11 @@
 oracle_sql() on the same parquet tables at sf0.01, compare row count, schema
 (column names), and a value hash over column-name-sorted, row-sorted output.
 
+The queries run in a stock-configured session (``stock_session``: ANSI on,
+AQE partition coalescing on, 200 shuffle partitions), which is what a
+caller's plain Spark 4 session looks like; the test suite covers sessions
+built by ``get_spark``.
+
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
 """
 
@@ -82,6 +87,77 @@ def value_hash(cols: list[str], rows: list[tuple]) -> str:
     return h.hexdigest()[:16]
 
 
+def stock_session(spark):
+    """A new session on ``spark``'s context with every SQL conf the context
+    was built with unset, so each reads Spark's default: ANSI on, AQE
+    partition coalescing on, 200 shuffle partitions, and so on."""
+    stock = spark.newSession()
+    for key, _ in spark.sparkContext.getConf().getAll():
+        if key.startswith("spark.sql.") and stock.conf.isModifiable(key):
+            stock.conf.unset(key)
+    return stock
+
+
+def duckdb_views(sf_dir: str):
+    """A DuckDB connection with one view per parquet table under ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        p = f"{sf_dir}/{t}.parquet"
+        if Path(p).exists():
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    return con
+
+
+def check_query(spark, con, fn, sql: str | None, sf_dir: str) -> tuple[str, str]:
+    """Run one query and its oracle.  Returns ``("ok", rows)``,
+    ``("rows-only", rows)`` when there is no oracle, or ``("fail", why)``."""
+    try:
+        sdf = fn(spark, sf_dir)
+        s_cols = sdf.columns
+        s_rows = [tuple(r) for r in sdf.collect()]
+    except Exception as e:  # noqa: BLE001
+        return "fail", f"spark error: {str(e)[:300]}"
+    if sql is None:
+        return "rows-only", f"{len(s_rows)} rows"
+    try:
+        # Fetch via pandas: DuckDB HUGEINT becomes float64 here (as it
+        # would for any pandas-based harness), whereas fetchall() would
+        # hand back a Python int and hide the type drift.
+        o_df = con.execute(sql).df()
+        o_cols = list(o_df.columns)
+        o_rows = [
+            tuple(
+                None
+                if v is None or (isinstance(v, float) and math.isnan(v))
+                else (v.item() if hasattr(v, "item") else v)
+                for v in row
+            )
+            for row in o_df.itertuples(index=False, name=None)
+        ]
+    except Exception as e:  # noqa: BLE001
+        return "fail", f"oracle error: {str(e)[:300]}"
+    problems = []
+    if sorted(s_cols) != sorted(o_cols):
+        problems.append(f"schema {sorted(s_cols)} vs {sorted(o_cols)}")
+    else:
+        # Dtype parity: a gate that canonicalizes by type may distinguish
+        # int 5 from float 5.0 (DuckDB HUGEINT -> pandas float64), so a
+        # type-class mismatch is a latent hash failure even when our own
+        # %.6g formatting collapses the difference.
+        tmis = type_mismatches(s_cols, s_rows, o_cols, o_rows)
+        if tmis:
+            problems.append(f"dtype {tmis}")
+    if len(s_rows) != len(o_rows):
+        problems.append(f"rows {len(s_rows)} vs {len(o_rows)}")
+    if not problems:
+        sh, oh = value_hash(s_cols, s_rows), value_hash(o_cols, o_rows)
+        if sh != oh:
+            problems.append(f"value-hash {sh} vs {oh}")
+    if problems:
+        return "fail", "; ".join(problems)
+    return "ok", f"{len(s_rows)} rows"
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -92,81 +168,22 @@ def main() -> None:
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
 
-    spark = get_spark("oracle-check")
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{sf_dir}/{t}.parquet"
-        if Path(p).exists():
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')"
-            )
+    spark = stock_session(get_spark("oracle-check"))
+    con = duckdb_views(sf_dir)
 
-    passed, failed, rows_only = [], [], []
+    counts = {"ok": 0, "fail": 0, "rows-only": 0}
     for name, fn in sorted(qs.items()):
         if only and name not in only:
             continue
-        try:
-            sdf = fn(spark, sf_dir)
-            s_cols = sdf.columns
-            s_rows = [tuple(r) for r in sdf.collect()]
-        except Exception as e:  # noqa: BLE001
-            failed.append((name, f"SPARK ERROR: {e}"))
-            print(f"FAIL  {name}: spark error: {str(e)[:300]}")
-            continue
-        sql = oracles.get(name)
-        if sql is None:
-            rows_only.append((name, len(s_rows)))
-            print(f"rows-only  {name}: {len(s_rows)} rows")
-            continue
-        try:
-            res = con.execute(sql)
-            # Fetch via pandas: DuckDB HUGEINT becomes float64 here (as it
-            # would for any pandas-based harness), whereas fetchall() would
-            # hand back a Python int and hide the type drift.
-            o_df = res.df()
-            o_cols = list(o_df.columns)
-            o_rows = [
-                tuple(
-                    None
-                    if v is None or (isinstance(v, float) and math.isnan(v))
-                    else (v.item() if hasattr(v, "item") else v)
-                    for v in row
-                )
-                for row in o_df.itertuples(index=False, name=None)
-            ]
-        except Exception as e:  # noqa: BLE001
-            failed.append((name, f"ORACLE ERROR: {e}"))
-            print(f"FAIL  {name}: oracle error: {str(e)[:300]}")
-            continue
-        problems = []
-        if sorted(s_cols) != sorted(o_cols):
-            problems.append(f"schema {sorted(s_cols)} vs {sorted(o_cols)}")
-        else:
-            # Dtype parity: the driver's canonicalization may distinguish
-            # int 5 from float 5.0 (DuckDB HUGEINT -> pandas float64), so a
-            # type-class mismatch is a latent hash failure even when our own
-            # %.6g formatting collapses the difference.
-            tmis = type_mismatches(s_cols, s_rows, o_cols, o_rows)
-            if tmis:
-                problems.append(f"dtype {tmis}")
-        if len(s_rows) != len(o_rows):
-            problems.append(f"rows {len(s_rows)} vs {len(o_rows)}")
-        if not problems:
-            sh, oh = value_hash(s_cols, s_rows), value_hash(o_cols, o_rows)
-            if sh != oh:
-                problems.append(f"value-hash {sh} vs {oh}")
-        if problems:
-            failed.append((name, "; ".join(problems)))
-            print(f"FAIL  {name}: {'; '.join(problems)}")
-        else:
-            passed.append(name)
-            print(f"ok    {name} ({len(s_rows)} rows)")
+        verdict, detail = check_query(spark, con, fn, oracles.get(name), sf_dir)
+        counts[verdict] += 1
+        print(f"{verdict:<9} {name}: {detail}")
 
     print(
-        f"\n{len(passed)} passed, {len(failed)} failed, "
-        f"{len(rows_only)} rows-only"
+        f"\n{counts['ok']} passed, {counts['fail']} failed, "
+        f"{counts['rows-only']} rows-only"
     )
-    if failed:
+    if counts["fail"]:
         sys.exit(1)
 
 

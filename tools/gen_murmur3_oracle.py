@@ -32,6 +32,11 @@ def to_signed(u: int) -> int:
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    print(oracle_sql(sf_dir))
+
+
+def oracle_sql(sf_dir: str) -> str:
+    """The VALUES oracle for the tables under ``sf_dir``."""
     rows = duckdb.sql(
         f"SELECT p_partkey, p_name FROM read_parquet('{sf_dir}/part.parquet')"
         " WHERE p_partkey <= 50 ORDER BY p_partkey"
@@ -42,11 +47,7 @@ def main() -> None:
         mod = ((h2 << 64) | h1) % DIVISOR
         vals.append(f"({pk}, {to_signed(h1)}, {to_signed(h2)}, {mod})")
     body = ",\n  ".join(vals)
-    print(
-        "SELECT * FROM (VALUES\n  "
-        + body
-        + "\n) t(p_partkey, h0, h1, mod)"
-    )
+    return "SELECT * FROM (VALUES\n  " + body + "\n) t(p_partkey, h0, h1, mod)"
 
 
 if __name__ == "__main__":

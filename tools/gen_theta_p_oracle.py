@@ -30,6 +30,11 @@ SEED = 9001
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    print(oracle_sql(sf_dir))
+
+
+def oracle_sql(sf_dir: str) -> str:
+    """The VALUES oracle for the tables under ``sf_dir``."""
     rows = duckdb.sql(
         f"SELECT DISTINCT o_orderstatus, o_custkey FROM "
         f"read_parquet('{sf_dir}/orders.parquet')"
@@ -44,7 +49,7 @@ def main() -> None:
     for f, e in ests.items():
         assert retained[f] < K, "oracle assumes the under-k (exact-region) branch"
     body = ",\n  ".join(f"('{f}', {round(e, 1)})" for f, e in ests.items())
-    print(
+    return (
         "SELECT o_orderstatus, CAST(estimate AS DOUBLE) AS estimate FROM (VALUES\n  "
         + body
         + "\n) t(o_orderstatus, estimate)"
